@@ -107,22 +107,21 @@ def test_semantic_dedup_keeps_representatives(spark):
 
 
 def test_semantic_dup_flags_fast_matches_expr(spark):
-    from webloghunter_spark.pipelines.semdedup import semantic_dup_flags_fast
-
-    expr = semantic_dup_flags(_emb(spark), n_centroids=2, tau=0.9).collect()
-    fast = semantic_dup_flags_fast(_emb(spark), n_centroids=2, tau=0.9).collect()
-    key = lambda r: (r.vec_id, r.cent_id, r.max_sim, r.is_dup)
-    assert sorted(map(key, expr)) == sorted(map(key, fast))
-
-
-def test_semantic_dedup_arrow_path(spark):
-    kept = {
-        r.vec_id
-        for r in semantic_dedup(
-            _emb(spark), n_centroids=2, tau=0.9, use_arrow=True
-        ).collect()
-    }
-    assert kept == {0, 1, 4}
+    """The NumPy kernel reproduces, row for row, the output the retired
+    expression-form self-join produced on this fixture (recorded
+    values: half-up round(6) cosines, NULL for each cluster's lowest
+    id)."""
+    got = sorted(
+        map(tuple, semantic_dup_flags(_emb(spark), n_centroids=2, tau=0.9).collect())
+    )
+    assert got == [
+        (0, 0, None, False),
+        (1, 1, None, False),
+        (2, 0, 1.0, True),
+        (3, 1, 0.980581, True),
+        (4, 1, 0.546268, False),
+        (5, 0, 0.995037, True),
+    ]
 
 
 def test_semantic_dedup_explicit_centroids(spark):
@@ -791,11 +790,8 @@ def test_hard_negatives_zero_norm_excluded(spark):
 
 def test_label_propagation_zero_norm_excluded(spark):
     """Zero-norm seeds never vote and zero-norm unlabeled rows get no
-    prediction — in BOTH the expr path and the Arrow kernel."""
-    from webloghunter_spark.functions.similarity import (
-        label_propagation,
-        label_propagation_fast,
-    )
+    prediction."""
+    from webloghunter_spark.functions.similarity import label_propagation
 
     seeds = spark.createDataFrame(
         [(0, [0.0, 0.0], 9), (1, [1.0, 0.0], 2), (2, [0.9, 0.1], 2)],
@@ -805,11 +801,8 @@ def test_label_propagation_zero_norm_excluded(spark):
         [(10, [0.0, 0.0]), (11, [1.0, 0.1])],
         "vec_id long, embedding array<double>",
     )
-    for fn in (label_propagation, label_propagation_fast):
-        rows = fn(unl, seeds, k=3).collect()
-        assert [(r.vec_id, r.pred_label, r.votes) for r in rows] == [
-            (11, 2, 2)
-        ], fn.__name__
+    rows = label_propagation(unl, seeds, k=3).collect()
+    assert [(r.vec_id, r.pred_label, r.votes) for r in rows] == [(11, 2, 2)]
 
 
 def test_cluster_label_purity_contingency(spark):
@@ -1342,15 +1335,13 @@ def test_semantic_contam_flags_same_bucket_neighbors(spark):
 
 
 def test_label_propagation_fast_matches_expr(spark):
-    """The Arrow kernel reproduces the expr path row-for-row,
-    including cosine-boundary and vote ties, on md5-derived
-    deterministic vectors."""
+    """The Arrow kernel reproduces, row for row, the output the retired
+    expression-form crossJoin + window produced on md5-derived
+    deterministic vectors, including cosine-boundary and vote ties
+    (recorded (vec_id, pred_label, votes) rows)."""
     import hashlib
 
-    from webloghunter_spark.functions.similarity import (
-        label_propagation,
-        label_propagation_fast,
-    )
+    from webloghunter_spark.functions.similarity import label_propagation
 
     def vec(i, d=8):
         return [
@@ -1369,9 +1360,17 @@ def test_label_propagation_fast_matches_expr(spark):
         + [(200 + i, vec(i)) for i in range(5)],
         "vec_id long, embedding array<double>",
     )
-    a = sorted(map(tuple, label_propagation(unl, seeds, k=7).collect()))
-    b = sorted(map(tuple, label_propagation_fast(unl, seeds, k=7).collect()))
-    assert a == b and len(a) == 45
+    got = sorted(map(tuple, label_propagation(unl, seeds, k=7).collect()))
+    # (pred_label, votes) for ids 100..139, then the seed copies 200..204
+    expected = [
+        (1, 3), (1, 4), (1, 3), (2, 3), (0, 4), (0, 3), (2, 4), (0, 4), (1, 3), (1, 3),
+        (2, 3), (1, 4), (0, 4), (0, 3), (0, 3), (0, 3), (0, 3), (0, 3), (1, 4), (2, 4),
+        (0, 3), (0, 3), (0, 3), (0, 3), (0, 3), (1, 4), (2, 3), (1, 4), (0, 3), (2, 3),
+        (0, 3), (0, 3), (0, 3), (2, 4), (1, 3), (1, 3), (0, 3), (2, 3), (0, 3), (0, 4),
+        (1, 3), (0, 5), (2, 4), (0, 3), (0, 3),
+    ]
+    ids = list(range(100, 140)) + list(range(200, 205))
+    assert got == [(i, p, v) for i, (p, v) in zip(ids, expected)]
 
 
 def test_token_budget_by_group_independent_budgets(spark):
@@ -1981,35 +1980,6 @@ def test_dataset_diff_status_and_stage_transitions(spark):
     assert out[("added", -1, 0)] == 1           # doc 5 stub
     assert out[("added", -1, 5)] == 1           # doc 6
     assert sum(out.values()) == 6
-
-
-def test_repeated_window_spans_sort_strategy_parity(spark):
-    """The suffix-ordering ('sort') repeat-set strategy returns
-    row-for-row the hash-aggregate form's output — cross-doc repeats,
-    in-doc repeats, overlapping-span union, and clean docs absent."""
-    from webloghunter_spark.pipelines.dedup import repeated_window_spans
-
-    boiler = "all rights reserved contact us for more info"
-    docs = spark.createDataFrame(
-        [
-            (1, f"alpha beta {boiler} gamma"),
-            (2, f"delta {boiler} epsilon zeta"),
-            (3, "x y z x y z x y z x y z"),      # in-doc repeats
-            (4, "unique words only here now"),    # clean: absent
-            (5, None),
-        ],
-        "doc_id long, text string",
-    )
-    h = sorted(tuple(r) for r in
-               repeated_window_spans(docs, window=4).collect())
-    s = sorted(tuple(r) for r in
-               repeated_window_spans(docs, window=4,
-                                     strategy="sort").collect())
-    assert h == s and len(h) >= 3
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="strategy"):
-        repeated_window_spans(docs, window=4, strategy="suffix")
 
 
 def test_containment_pairs_finds_doc_in_doc(spark):

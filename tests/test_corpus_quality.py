@@ -188,29 +188,6 @@ def test_tfidf_salted_path_identical(spark):
 
 # --- bigram LM scoring -------------------------------------------------------
 
-def test_bigram_logprob_salted_path_identical(spark):
-    """The salt_partitions skew path (round-14, the documented
-    module-docstring pattern) produces IDENTICAL (n_bigrams, avg_ll)
-    rows to the plain path on a hot-bigram fixture — only the shuffle
-    layout changes (two-stage counts + S-way replicated count
-    tables)."""
-    from webloghunter_spark.functions.lm import bigram_logprob
-
-    hot = " ".join(["of the"] * 30)            # one dominant bigram
-    rows = [(i, hot + f" tail{i} bit{i}") for i in range(1, 9)] + [
-        (9, "the cat sat on the mat"),
-        (10, "one"),
-        (11, None),
-        (12, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    plain = sorted(map(tuple, bigram_logprob(df).collect()))
-    salted = sorted(
-        map(tuple, bigram_logprob(df, salt_partitions=8).collect())
-    )
-    assert plain == salted and len(plain) == 12
-
-
 def test_bigram_logprob_ranks_gibberish_below_fluent(spark):
     from math import log
 
@@ -653,6 +630,31 @@ def test_boilerplate_null_text_all_zero(spark):
            boilerplate_segments(df, seg_tokens=5, min_df=2).collect()}
     assert out[1].n_seg == 0 and out[1].n_kept == 0 and out[1].new_text == ""
     assert out[2].n_kept == 1
+
+
+def test_remove_boilerplate_rejects_string_keyed_model(spark):
+    """A model persisted with the pre-round-14 md5-hex string keys
+    must fail loudly instead of silently removing nothing; so must a
+    frame with no seg_key column."""
+    from webloghunter_spark.pipelines.dedup import (
+        boilerplate_keys,
+        remove_boilerplate,
+    )
+
+    seg = " ".join(f"b{i}" for i in range(5))
+    df = _docs(spark, [(d, f"{seg} u{d}") for d in (1, 2, 3)])
+    model = boilerplate_keys(df, seg_tokens=5, min_df=3)
+    out = {r.doc_id: r.n_kept
+           for r in remove_boilerplate(df, model, seg_tokens=5).collect()}
+    assert out == {1: 1, 2: 1, 3: 1}
+
+    hex_model = spark.createDataFrame(
+        [("0123456789abcdef0123456789abcdef",)], "seg_key string"
+    )
+    with pytest.raises(ValueError, match="md5-hex"):
+        remove_boilerplate(df, hex_model, seg_tokens=5)
+    with pytest.raises(ValueError, match="no seg_key column"):
+        remove_boilerplate(df, model.select(F.col("seg_key").alias("k")))
 
 
 # --- BM25 retrieval probe ------------------------------------------------------

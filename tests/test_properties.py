@@ -235,32 +235,47 @@ FP_EDGE_TEXTS = [
 ]
 
 
+# Values the retired expression forms (Java-regex normalization +
+# interpreted per-character folds) produced on FP_EDGE_TEXTS, by index.
+FP_EDGE_ROLLING = [
+    None, None, None, 32, 97, 623782272219963, 623782272219963,
+    733352744748883, 223025161682602, 256806364855368, 835101196192059,
+    960018793290313, 129388401362535, 66302748177936,
+]
+FP_EDGE_WINNOW = [
+    [], [], [], [], [], [407457409213910], [407457409213910], [],
+    [22179744223248, 472898273524995],
+    [17117255644844, 61841152943527, 162263509195752, 180538515303826,
+     185668943540724, 212957561572616, 324962320433688, 445911453841213,
+     460100667645347],
+    [850624813114120],
+    [2810064530648, 14111807385719, 17399597601637, 90456469431947,
+     152031615772899, 178015949608209, 328199127432181],
+    [],
+    [199916333970941],
+]
+
+
 def test_fingerprint_fast_twins_match_expr(spark):
-    """The Arrow twins must be bit-identical to the expression forms on
-    edge inputs: empty/blank text, unicode whitespace (Java regex \\s is
-    ASCII-only — Python re must not eat \\xa0), non-ASCII letters, and
-    lengths around the winnow minimum."""
+    """The Arrow fingerprint UDFs reproduce the retired expression
+    forms' recorded values on edge inputs: empty/blank text, unicode
+    whitespace (regex \\s is ASCII-only — Python re must not eat
+    \\xa0), non-ASCII letters, and lengths around the winnow minimum."""
     from webloghunter_spark.functions.text import (
         with_rolling_fingerprint,
-        with_rolling_fingerprint_fast,
         with_winnowed_fingerprints,
-        with_winnowed_fingerprints_fast,
     )
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(FP_EDGE_TEXTS)], "id long, text string"
     )
-    slow = with_rolling_fingerprint(df, "text", out_col="fp")
-    fast = with_rolling_fingerprint_fast(df, "text", out_col="fp")
-    srows = {r.id: r.fp for r in slow.collect()}
-    frows = {r.id: r.fp for r in fast.collect()}
-    assert srows == frows
+    fp = {r.id: r.fp for r in
+          with_rolling_fingerprint(df, "text", out_col="fp").collect()}
+    assert [fp[i] for i in range(len(FP_EDGE_TEXTS))] == FP_EDGE_ROLLING
 
-    slow_w = with_winnowed_fingerprints(df, "text", out_col="w", kgram=8, window=4)
-    fast_w = with_winnowed_fingerprints_fast(df, "text", out_col="w", kgram=8, window=4)
-    swin = {r.id: list(r.w) for r in slow_w.collect()}
-    fwin = {r.id: list(r.w) for r in fast_w.collect()}
-    assert swin == fwin
+    w = with_winnowed_fingerprints(df, "text", out_col="w", kgram=8, window=4)
+    win = {r.id: list(r.w) for r in w.collect()}
+    assert [win[i] for i in range(len(FP_EDGE_TEXTS))] == FP_EDGE_WINNOW
 
 
 @given(

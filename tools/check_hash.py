@@ -110,7 +110,12 @@ def main():
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(app_name="hash-check")
+    # no console progress bar: its \r redraws overwrite PASS lines
+    # when stdout is captured to a file
+    spark = get_spark(
+        app_name="hash-check",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -1963,12 +1963,14 @@ SQL_KNN_LSH = """
 
 
 def q_doc_fingerprint(spark, sf_dir):
-    """Rolling-hash (Rabin-Karp) whole-document fingerprint."""
+    """Rolling-hash (Rabin-Karp) whole-document fingerprint, from the
+    Arrow-batched UDF (numpy dot-with-mod per row). doc_fingerprint_fast
+    runs this same function."""
     from webloghunter_spark.functions.text import with_rolling_fingerprint
 
     docs = _fan(_t(spark, sf_dir, "documents"))
-    # persist(): the isNotNull filter would otherwise push below the
-    # staged projections with the whole fingerprint expression inlined.
+    # persist: the isNotNull filter would otherwise push below the
+    # projection and evaluate the Arrow UDF twice.
     fp = with_rolling_fingerprint(docs, "text", out_col="rh").persist()
     return fp.select("doc_id", "rh").filter(F.col("rh").isNotNull())
 
@@ -1991,14 +1993,16 @@ SQL_DOC_FINGERPRINT = f"""
 
 
 def q_winnow_fingerprints(spark, sf_dir):
-    """Winnowed k-gram fingerprints (Schleimer et al.), long form."""
+    """Winnowed k-gram fingerprints (Schleimer et al.), long form: k
+    shifted multiply-adds + strided sliding-min per row in an Arrow
+    UDF. winnow_fingerprints_fast runs this same function."""
     from webloghunter_spark.functions.text import with_winnowed_fingerprints
 
     docs = _fan(_t(spark, sf_dir, "documents"))
-    # persist() before explode: InferFiltersFromGenerate adds a
-    # size(winnow_fps) > 0 filter that pushdown would otherwise
-    # substitute below the staged projections, re-inlining the whole
-    # per-character pipeline into one per-row filter expression.
+    # persist() before explode: InferFiltersFromGenerate's
+    # size(winnow_fps) > 0 would otherwise be pushed below the
+    # projection and re-run the Arrow UDF a second time (one
+    # ArrowEvalPython for the filter, one for the project).
     fps = with_winnowed_fingerprints(docs, "text", kgram=8, window=4).persist()
     return fps.select("doc_id", F.explode("winnow_fps").alias("fp")).distinct()
 
@@ -2063,35 +2067,6 @@ SQL_WINNOW_PAIRS = f"""
            (n_shared * 10000 // least(na, nb))::BIGINT AS overlap_bp
     FROM ex WHERE n_shared >= 2
 """
-
-
-def q_doc_fingerprint_fast(spark, sf_dir):
-    """Arrow twin of doc_fingerprint: identical Rabin-Karp values from
-    a vectorized pandas UDF (numpy dot-with-mod per row) instead of the
-    interpreted per-character HOF aggregate — the 100 TB path. Shares
-    doc_fingerprint's oracle; hash equality IS the twin-parity check."""
-    from webloghunter_spark.functions.text import with_rolling_fingerprint_fast
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    # persist: the isNotNull filter would otherwise push below the
-    # projection and evaluate the Arrow UDF twice (same barrier as the
-    # expr sibling / the winnow twin).
-    fp = with_rolling_fingerprint_fast(docs, "text", out_col="rh").persist()
-    return fp.select("doc_id", "rh").filter(F.col("rh").isNotNull())
-
-
-def q_winnow_fingerprints_fast(spark, sf_dir):
-    """Arrow twin of winnow_fingerprints (k shifted multiply-adds +
-    strided sliding-min per row); shares the winnow oracle."""
-    from webloghunter_spark.functions.text import with_winnowed_fingerprints_fast
-
-    docs = _fan(_t(spark, sf_dir, "documents"))
-    # persist: InferFiltersFromGenerate's size(winnow_fps) > 0 would
-    # otherwise be pushed below the projection and re-run the Arrow UDF
-    # a second time (one ArrowEvalPython for the filter, one for the
-    # project) — same barrier as the expr sibling.
-    fps = with_winnowed_fingerprints_fast(docs, "text", kgram=8, window=4).persist()
-    return fps.select("doc_id", F.explode("winnow_fps").alias("fp")).distinct()
 
 
 def q_winnow_containment_drop(spark, sf_dir):
@@ -4656,9 +4631,11 @@ def q_semantic_dedup(spark, sf_dir):
     """SemDeDup over the embedding store: assign to the nearest of 8
     deterministic centroids (lowest-id vectors — the oracle-checkable
     stand-in for kmeans_centroids), flag every vector with a lower-id
-    same-cluster member at cosine >= 0.35. Assignment is the broadcast
-    ivf_assign kernel; the pair scan shuffles once on cent_id and its
-    cost is bounded by cluster size (raise n_centroids at scale)."""
+    same-cluster member at cosine >= 0.35. Assignment is the Arrow
+    ivf_assign_fast kernel; the pair scan shuffles once on cent_id,
+    runs one NumPy matmul per cluster, and its cost is bounded by
+    cluster size (raise n_centroids at scale). semantic_dedup_fast runs
+    this same function."""
     from webloghunter_spark.pipelines.semdedup import semantic_dup_flags
 
     emb = _fan(_t(spark, sf_dir, "embeddings"))
@@ -4699,18 +4676,6 @@ SQL_SEMANTIC_DEDUP = """
            coalesce(p.max_sim >= 0.35, FALSE) AS is_dup
     FROM assigned a LEFT JOIN pair_sim p ON a.vec_id = p.vec_id
 """
-
-
-def q_semantic_dedup_fast(spark, sf_dir):
-    """Arrow twin of semantic_dedup: identical assignment + keep rule,
-    but the intra-cluster pair scan is one NumPy matmul per cluster
-    (applyInPandas) instead of interpreted HOF folds. Same oracle —
-    the two paths must agree after round(6)."""
-    from webloghunter_spark.pipelines.semdedup import semantic_dup_flags_fast
-
-    emb = _fan(_t(spark, sf_dir, "embeddings"))
-    flags = semantic_dup_flags_fast(emb, n_centroids=8, tau=0.35)
-    return flags.withColumn("max_sim", F.coalesce("max_sim", F.lit(-2.0)))
 
 
 def q_value_quantiles(spark, sf_dir):
@@ -7489,18 +7454,13 @@ def q_label_propagation(spark, sf_dir):
     first 100 vectors — seed sets don't grow with the crawl), the
     rest take the majority label of their 10 nearest seeds by
     cosine. Cost is |corpus| x |seeds|, linear in the corpus because
-    the seed side is constant. Runs the Arrow matmul kernel (the
-    production path: the expr twin's interpreted HOF dots measured
-    177x at the 32x probe on a proportional seed set; parity-tested
-    against the expr path incl. ties)."""
-    from webloghunter_spark.functions.similarity import (
-        label_propagation_fast,
-    )
+    the seed side is constant. Runs the Arrow matmul kernel."""
+    from webloghunter_spark.functions.similarity import label_propagation
 
     raw = _t(spark, sf_dir, "embeddings")
     seeds = raw.filter(F.col("vec_id") < 100)
     unlabeled = _fan(raw.filter(F.col("vec_id") >= 100))
-    return label_propagation_fast(unlabeled, seeds, k=10)
+    return label_propagation(unlabeled, seeds, k=10)
 
 
 SQL_LABEL_PROPAGATION = """
@@ -10560,8 +10520,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # slot 51 (semantic_dedup_fast) is the fast variant of the
     # freshly-sampled semantic_dedup. Everything after slot 50 is
     # covered by the committed full-registry HASHCHECK artifacts.
+    # The doc_fingerprint / winnow_fingerprints / semantic_dedup
+    # `_fast` keys map to the same function as their plain keys: each
+    # operator has one implementation.
     # -- round-9/10 staleness cohort (50) --
-    "doc_fingerprint_fast": q_doc_fingerprint_fast,
+    "doc_fingerprint_fast": q_doc_fingerprint,
     "url_blocklist_big": q_url_blocklist_big,
     "batch_leakage": q_batch_leakage,
     "bloom_audit": q_bloom_audit,
@@ -10613,7 +10576,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "weighted_sample": q_weighted_sample,
     # -- deferred round-10 fast variant, then the remainder
     # (committed full-registry HASHCHECK coverage) --
-    "semantic_dedup_fast": q_semantic_dedup_fast,
+    "semantic_dedup_fast": q_semantic_dedup,
     "topk_per_group": q_topk_per_group,
     "url_blocklist": q_url_blocklist,
     "winnow_fingerprints": q_winnow_fingerprints,
@@ -10662,7 +10625,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "train_split": q_train_split,
     "unimax_alloc": q_unimax_alloc,
     "uri_risk": q_uri_risk,
-    "winnow_fingerprints_fast": q_winnow_fingerprints_fast,
+    "winnow_fingerprints_fast": q_winnow_fingerprints,
     "winnow_pairs": q_winnow_pairs,
     "winnow_containment_drop": q_winnow_containment_drop,
     "curate_incremental": q_curate_incremental,

@@ -684,106 +684,22 @@ def label_propagation(
     hand the vote to the k smallest-id seeds; the triplet_mining
     contract).
 
-    Scale: the SEED side is the broadcast (labeled data is the small
-    side in SSL — thousands against a corpus of billions); the big
-    side streams through one scan, per-row scoring against the
-    broadcast array, and the per-id top-k window runs over rows that
-    are already co-located by the broadcast crossJoin. The vote and
-    the argmax are combinable aggregates. For seed sets too big to
-    broadcast, prune candidates with the IVF/LSH bucket path
-    (cosine_topk_ivf / cosine_topk_lsh) before voting — the vote
-    machinery is unchanged.
-    """
-    if k <= 0:
-        raise ValueError(f"k must be > 0, got {k}")
-    # norms are per-vector: hoist them to per-side projections —
-    # inside the pair scoring they would be re-evaluated per
-    # candidate (HOF folds are interpreted, not codegen'd; the
-    # neardup_pairs_lsh 3x lesson)
-    s = F.broadcast(
-        seeds.filter(F.col(label_col).isNotNull()).select(
-            F.col(id_col).alias("_sid"),
-            F.col(label_col).alias("_slab"),
-            F.col(vec_col).alias("_sv"),
-            norm_expr(F.col(vec_col)).alias("_sn"),
-        ).filter(F.col("_sn") > 0)
-    )
-    u = unlabeled.select(
-        F.col(id_col),
-        F.col(vec_col).alias("_uv"),
-        norm_expr(F.col(vec_col)).alias("_un"),
-    ).filter(F.col("_un") > 0)
-    raw = dot_expr(F.col("_uv"), F.col("_sv")) / (
-        F.col("_un") * F.col("_sn")
-    )
-    grid = F.lit(float(10 ** round_digits))
-    # explicit half-away-from-zero grid (floor(|x|*1e4+0.5)) instead
-    # of F.round: F.round is BigDecimal HALF_UP on the double's
-    # SHORTEST DECIMAL REPR (0.08725 -> 0.0873 even when the stored
-    # double sits below the midpoint), while DuckDB's round() and the
-    # Arrow kernel's round_half_up act on the stored value — the grid
-    # makes all three agree bit-for-bit
-    scored = u.crossJoin(s).select(
-        id_col,
-        "_sid",
-        "_slab",
-        (F.signum(raw) * F.floor(F.abs(raw) * grid + F.lit(0.5)) / grid)
-        .alias("_cos"),
-    )
-    from pyspark.sql import Window as _W
-
-    w = _W.partitionBy(id_col).orderBy(F.col("_cos").desc(), F.col("_sid"))
-    topk = scored.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= k
-    )
-    votes = topk.groupBy(id_col, "_slab").agg(
-        F.count(F.lit(1)).alias("_votes")
-    )
-    return (
-        votes.groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("_votes"), (-F.col("_slab")).alias("_nl")
-                )
-            ).alias("_w")
-        )
-        .select(
-            id_col,
-            (-F.col("_w._nl")).alias("pred_label"),
-            F.col("_w._votes").alias("votes"),
-        )
-    )
-
-
-def label_propagation_fast(
-    unlabeled: DataFrame,
-    seeds: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    round_digits: int = 4,
-) -> DataFrame:
-    """Arrow twin of `label_propagation` — identical output after
-    rounding: the seed matrix (small by the SSL contract) is collected
+    Scale: the seed side is small by the SSL contract (thousands
+    against a corpus of billions), so the seed matrix is collected
     once and shipped in the task closure; each Arrow batch scores ALL
     seeds with one (batch x dim)@(dim x m) matmul — BLAS throughput
-    instead of m interpreted HOF dot-folds per row (the expr path
-    measured 177x wall at the 32x probe; this kernel ~9x).
+    (an interpreted HOF dot-fold per pair measured 177x wall at the
+    32x probe; this kernel ~9x). For seed sets too big to ship,
+    prune candidates with the IVF/LSH bucket path (cosine_topk_ivf /
+    cosine_topk_lsh) before voting.
 
-    Tie parity with the expr path: both paths round cosines
-    half-away-from-zero on the stored double (the expr path's
-    explicit floor grid == round_half_up == DuckDB round(); F.round's
-    shortest-repr HALF_UP would diverge on grid-line doubles), seed
-    columns are pre-sorted by sid ascending and
-    the stable argsort on -S reproduces the window's (cos desc, sid
-    asc) order; np.unique + argmax picks the smallest label among
-    tied vote counts, matching max(struct(votes, -label))."""
+    Tie rules: cosines round half-away-from-zero on the stored double
+    (round_half_up == DuckDB round()), seed columns are pre-sorted by
+    sid ascending so the stable argsort on -S gives the (cos desc,
+    sid asc) order, and np.unique + argmax picks the smallest label
+    among tied vote counts."""
     import numpy as np
     import pandas as pd
-
-    from webloghunter_spark.functions.numeric import round_half_up
 
     if k <= 0:
         raise ValueError(f"k must be > 0, got {k}")
@@ -793,7 +709,7 @@ def label_propagation_fast(
         .collect()
     )
     rows.sort(key=lambda r: r[0])
-    # zero-norm exclusion on both sides, matching the expr twin
+    # zero-norm exclusion on both sides
     def _sq(r):
         v = np.asarray(r[2], dtype=np.float64)
         return float(v @ v)
@@ -814,7 +730,7 @@ def label_propagation_fast(
                 continue
             v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             vn = np.sqrt((v * v).sum(axis=1))
-            keep = vn > 0  # zero-norm rows excluded, like the expr twin
+            keep = vn > 0  # zero-norm rows excluded
             if not keep.all():
                 pdf, v, vn = pdf[keep], v[keep], vn[keep]
                 if len(pdf) == 0:

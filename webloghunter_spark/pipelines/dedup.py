@@ -356,15 +356,32 @@ def containment_pairs(
     the distinct shingle arrays with the same shuffle_hash discipline
     as ngram_jaccard_pairs (the shingle table scales with the corpus —
     never broadcast it)."""
+    return _containment_pairs(
+        df,
+        F.array_distinct(shingles_expr(text_col, shingle_k)),
+        id_col,
+        threshold,
+        max_df,
+    )
+
+
+def _containment_pairs(
+    df: DataFrame,
+    shingles: Column,
+    id_col: str,
+    threshold: float,
+    max_df: int,
+) -> DataFrame:
+    """The containment_pairs body over a distinct-shingle array column
+    (string shingles or their 60-bit hashes)."""
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1], got {threshold}")
     if max_df < 2:
         raise ValueError(f"max_df must be >= 2, got {max_df}")
     sh = materialize(
-        df.select(
-            F.col(id_col),
-            F.array_distinct(shingles_expr(text_col, shingle_k)).alias("_sh"),
-        ).filter(F.size("_sh") > 0)
+        df.select(F.col(id_col), shingles.alias("_sh")).filter(
+            F.size("_sh") > 0
+        )
     )
     ex = _containment_ex(sh, id_col, max_df)
     c_ab = F.col("n_common").cast("double") / F.col("_na")
@@ -1169,7 +1186,27 @@ def remove_boilerplate(
     (seg_key) frame) to a document frame: per-doc removal depends only
     on the doc's own segments and the static key set, so this is
     stateless per document — the property the streaming twin's parity
-    rests on."""
+    rests on.
+
+    Raises ValueError unless `boiler.seg_key` is BIGINT: a model saved
+    before round 14 (md5-hex string keys) would otherwise join to
+    nothing and silently remove nothing."""
+    from pyspark.sql.types import LongType
+
+    key_type = (
+        boiler.schema["seg_key"].dataType
+        if "seg_key" in boiler.columns
+        else None
+    )
+    if not isinstance(key_type, LongType):
+        raise ValueError(
+            "remove_boilerplate: boiler.seg_key must be BIGINT (60-bit "
+            "md5-prefix keys); got "
+            f"{key_type.simpleString() if key_type else 'no seg_key column'}. "
+            "Round 14 changed boilerplate keys from 32-char md5-hex "
+            "strings to 60-bit BIGINTs; rebuild the model with "
+            "boilerplate_keys."
+        )
     segs = _doc_segments(df, text_col, id_col, seg_tokens)
     kept = segs.filter(F.col("seg").isNotNull()).join(
         boiler, on="seg_key", how="left_anti"
@@ -1316,51 +1353,11 @@ def lsh_recall_audit(
     )
 
 
-def _repeated_hashes_sorted(wins: DataFrame) -> DataFrame:
-    """Repeat set via SORT instead of hash-aggregate: range-partition
-    the window hashes (Spark's range partitioner keys on value
-    comparison, so equal hashes land in one partition), sort within
-    partitions, and emit each value equal to its sorted predecessor
-    exactly once — one Arrow mapInPandas pass with cross-batch carry
-    (Arrow batches arrive in partition order). This is the relational
-    stand-in for the suffix-ordering ExactSubstr pipeline; unlike the
-    hash form, the FULL window volume crosses the range exchange."""
-    import pandas as pd
-
-    def gen(batches):
-        prev = None
-        emitted_prev = False
-        for pdf in batches:
-            out = []
-            for v in pdf["_h"]:
-                if v == prev:
-                    if not emitted_prev:
-                        out.append(v)
-                        emitted_prev = True
-                else:
-                    prev = v
-                    emitted_prev = False
-            if out:
-                yield pd.DataFrame({"_h": out})
-
-    parts = wins.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    # schema follows the wins key type (string historically, 60-bit
-    # BIGINT since the round-14 posting compression)
-    h_type = wins.schema["_h"].dataType.simpleString()
-    return (
-        wins.select("_h")
-        .repartitionByRange(int(parts), "_h")
-        .sortWithinPartitions("_h")
-        .mapInPandas(gen, f"_h {h_type}")
-    )
-
-
 def repeated_window_spans(
     df: DataFrame,
     window: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "hash",
 ) -> DataFrame:
     """Exact-substring duplication signal (the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better"
@@ -1388,22 +1385,14 @@ def repeated_window_spans(
       contributes max(0, end - max(start, max_prev_end)) — O(hits)
       rows through the exchange, never O(ntok).
 
-    `strategy` picks how the repeat set is computed — identical
-    output, different physical plan (the ExactSubstr literature's two
-    shapes, measured head-to-head in SCALING.md):
-    - 'hash' (default): groupBy on the window md5 — partial map-side
-      combine shrinks the exchange to |distinct| before the shuffle.
-    - 'sort': the suffix-ordering analog — range-partition the window
-      hashes (equal keys co-locate by range contract), sort within
-      partitions, and mark values equal to their sorted neighbor via
-      one Arrow pass. The FULL window volume crosses the exchange
-      (no combine); it exists as the relational stand-in for the
-      suffix-array pipeline and as the measurement control.
+    The repeat set is a hash aggregate: partial map-side combine
+    shrinks the exchange to |distinct| before the shuffle. The
+    suffix-ordering alternative (range-partition, sort, mark equal
+    neighbors) moves the full window volume and won in no measured
+    regime (SCALING.md).
     """
     if window <= 0:
         raise ValueError(f"window must be > 0, got {window}")
-    if strategy not in ("hash", "sort"):
-        raise ValueError(f"strategy must be 'hash' or 'sort', got {strategy!r}")
     from pyspark.sql import Window as W
 
     base = df.select(
@@ -1427,15 +1416,12 @@ def repeated_window_spans(
         .alias("_h"),
     )
     wins = materialize(wins)
-    if strategy == "sort":
-        repeated = _repeated_hashes_sorted(wins)
-    else:
-        repeated = (
-            wins.groupBy("_h")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") >= 2)
-            .select("_h")
-        )
+    repeated = (
+        wins.groupBy("_h")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") >= 2)
+        .select("_h")
+    )
     rep = wins.join(repeated, "_h", "left_semi")
     w = (
         W.partitionBy(id_col)
@@ -1833,19 +1819,17 @@ def winnow_pairs(
     never all-pairs); verification is exact on the per-doc sorted
     distinct fingerprint arrays with the same shuffle_hash discipline
     (the fingerprint table scales with the corpus — never broadcast).
-    Fingerprints come from the Arrow fast twin (the 100 TB scan
-    path), whose value-identity with the expression form is pinned by
-    the shared winnow oracle and the property tests."""
-    from webloghunter_spark.functions.text import (
-        with_winnowed_fingerprints_fast,
-    )
+    Fingerprints come from the Arrow winnow UDF (the 100 TB scan
+    path), whose values are pinned by the shared winnow oracle and
+    the property tests."""
+    from webloghunter_spark.functions.text import with_winnowed_fingerprints
 
     if max_df < 2:
         raise ValueError(f"max_df must be >= 2, got {max_df}")
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     sh = materialize(
-        with_winnowed_fingerprints_fast(
+        with_winnowed_fingerprints(
             df.select(F.col(id_col), F.col(text_col)),
             text_col, out_col="_fp", kgram=kgram, window=window,
         )
@@ -1948,30 +1932,12 @@ def containment_pairs_hashed(
     This is the family's 100 TB scan-width fix, measured at 2.7x on
     the 32x control (the box-saturating linear-verify fixture); the
     string form stays frozen for the oracles BUILT FROM it."""
-    if not 0.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-    if max_df < 2:
-        raise ValueError(f"max_df must be >= 2, got {max_df}")
-    sh = materialize(
-        df.select(
-            F.col(id_col),
-            hashed_shingles_expr(text_col, shingle_k).alias("_sh"),
-        ).filter(F.size("_sh") > 0)
-    )
-    ex = _containment_ex(sh, id_col, max_df)
-    c_ab = F.col("n_common").cast("double") / F.col("_na")
-    c_ba = F.col("n_common").cast("double") / F.col("_nb")
-    from webloghunter_spark.functions.similarity import grid_round_expr
-
-    return (
-        ex.filter(F.greatest(c_ab, c_ba) >= F.lit(float(threshold)))
-        .select(
-            "id_a",
-            "id_b",
-            "n_common",
-            grid_round_expr(c_ab, 4).alias("contain_ab"),
-            grid_round_expr(c_ba, 4).alias("contain_ba"),
-        )
+    return _containment_pairs(
+        df,
+        hashed_shingles_expr(text_col, shingle_k),
+        id_col,
+        threshold,
+        max_df,
     )
 
 
@@ -2018,7 +1984,7 @@ def winnow_containment_drop(
     Output: one row per input doc — (id, n_fps, quality_bp,
     n_containers, dropped), n_fps = 0 for too-short docs.
 
-    Scale shape: ONE text pass (the Arrow winnow twin — the 100 TB
+    Scale shape: ONE text pass (the Arrow winnow UDF — the 100 TB
     scan path) computes fingerprints AND quality; quality rides
     through the verify joins as carry_cols (the containment_drop /
     dup_source_matrix lesson); candidates come from discriminative
@@ -2039,15 +2005,15 @@ def winnow_containment_drop(
         raise ValueError(f"max_df must be >= 2, got {max_df}")
     from webloghunter_spark.functions.text import (
         quality_bp_expr,
-        with_winnowed_fingerprints_fast,
+        with_winnowed_fingerprints,
     )
 
     # one text pass: winnowed fingerprints (already distinct-sorted
-    # from the Arrow twin) and quality in the same scan; materialize
-    # is the pushdown barrier the winnow twins need (explode-inferred
+    # from the Arrow UDF) and quality in the same scan; materialize
+    # is the pushdown barrier the winnow UDF needs (explode-inferred
     # size filters would re-run the Arrow UDF below the projection)
     base = materialize(
-        with_winnowed_fingerprints_fast(
+        with_winnowed_fingerprints(
             df.select(
                 F.col(id_col),
                 F.col(text_col),

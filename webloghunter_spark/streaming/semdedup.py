@@ -9,7 +9,8 @@ stream-safe), and a stateful operator keyed by `cent_id` compares each
 arrival against the cluster members already seen, emitting
 (vec_id, cent_id, max_sim, is_dup) append-only.
 
-Parity contract with `semantic_dup_flags` (tau, rounding identical):
+Parity contract with batch `semantic_dup_flags` (its per-cluster NumPy
+kernel; tau and round_digits identical):
 - batch defines max_sim against LOWER-ID members of the cluster;
   the stream compares against lower-id members SEEN SO FAR.  When ids
   arrive in nondecreasing order (the ingest-with-monotonic-ids case)
